@@ -1,0 +1,1 @@
+"""Engine benchmark: seeded workloads, end-to-end and per-layer metrics."""
